@@ -33,13 +33,18 @@ object Bench {
     * clean 8-core scaling run (indistinguishable from a 32-core record
     * because cpus was not stamped). A record is canonical only when it is
     * the FULL query set at the canonical core count on a quiet host;
-    * everything else is diverted to a self-describing side file. */
+    * everything else is diverted to a self-describing side file. Only
+    * the digits of `cpus` reach a file name: a value with none (e.g.
+    * `local[*]`'s `*`) goes to one fixed side file. */
   def targetFor(subsetRun: Boolean, cpus: String, canonCpus: String,
                 loadWarn: Boolean, cleanOnDisk: Boolean,
                 sfIsCanon: Boolean = true): String =
     if (subsetRun) "BENCH_LOCAL_SUBSET.json"
     else if (!sfIsCanon) "BENCH_LOCAL_ALTSF.json" // e.g. a /tmp sf1 corpus
-    else if (cpus != canonCpus) s"BENCH_LOCAL_C$cpus.json"
+    else if (cpus != canonCpus) {
+      val digits = cpus.filter(_.isDigit)
+      if (digits.isEmpty) "BENCH_LOCAL_C_NONNUMERIC.json" else s"BENCH_LOCAL_C$digits.json"
+    }
     else if (loadWarn && cleanOnDisk) "BENCH_LOCAL_DIRTY.json"
     else "BENCH_LOCAL.json"
 

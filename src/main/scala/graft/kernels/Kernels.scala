@@ -456,22 +456,51 @@ object Kernels {
   // ------------------------------------------- LB_Keogh / envelope
 
   /** Sliding min/max envelope of radius r (univariate) —
-    * `dtw_variants.py:1299-1367`. Returns (low, up). */
+    * `dtw_variants.py:1299-1367`. Returns (low, up).
+    *
+    * O(sz) for any radius: two monotone deques of indices (Lemire's
+    * streaming min/max), so every index enters and leaves each deque at
+    * most once. The result is bit-identical to the plain O(sz·r) window
+    * scan with strict compares:
+    *  - NaN never enters a deque, so it is skipped, and a window holding
+    *    only NaN gives (+Inf, -Inf);
+    *  - a new value evicts only STRICTLY worse ones, so among equal
+    *    values the earliest index wins and ±0.0 keep the first one's bits;
+    *  - radius < 0 is an empty window everywhere: (+Inf, -Inf). */
   def lbEnvelope(ts: Array[Double], radius: Int): (Array[Double], Array[Double]) = {
     val n = ts.length
     val low = new Array[Double](n)
     val up = new Array[Double](n)
+    if (radius < 0) {
+      java.util.Arrays.fill(low, Inf); java.util.Arrays.fill(up, -Inf)
+      return (low, up)
+    }
+    // a wider window is the whole series; clipping also keeps i + r from
+    // overflowing for radius near Int.MaxValue
+    val r = math.min(radius, n)
+    // live deque entries are mins(minH until minT): ascending values with
+    // the current minimum at minH (maxs: descending, maximum at maxH)
+    val mins = new Array[Int](n); var minH = 0; var minT = 0
+    val maxs = new Array[Int](n); var maxH = 0; var maxT = 0
+    var next = 0
     var i = 0
     while (i < n) {
-      var mn = Inf; var mx = -Inf
-      var j = math.max(0, i - radius)
-      val end = math.min(n - 1, i + radius)
-      while (j <= end) {
-        if (ts(j) < mn) mn = ts(j)
-        if (ts(j) > mx) mx = ts(j)
-        j += 1
+      val end = math.min(n - 1, i + r)
+      while (next <= end) {
+        val v = ts(next)
+        if (v == v) {
+          while (minT > minH && ts(mins(minT - 1)) > v) minT -= 1
+          mins(minT) = next; minT += 1
+          while (maxT > maxH && ts(maxs(maxT - 1)) < v) maxT -= 1
+          maxs(maxT) = next; maxT += 1
+        }
+        next += 1
       }
-      low(i) = mn; up(i) = mx
+      val start = i - r
+      while (minH < minT && mins(minH) < start) minH += 1
+      while (maxH < maxT && maxs(maxH) < start) maxH += 1
+      low(i) = if (minH < minT) ts(mins(minH)) else Inf
+      up(i) = if (maxH < maxT) ts(maxs(maxH)) else -Inf
       i += 1
     }
     (low, up)
@@ -487,13 +516,26 @@ object Kernels {
 
   /** LB_Keogh against a precomputed envelope — the per-pair O(sz) band
     * check when the candidate's envelope is amortized across queries. */
-  def lbKeoghEnv(query: Array[Double], low: Array[Double], up: Array[Double]): Double = {
+  def lbKeoghEnv(query: Array[Double], low: Array[Double], up: Array[Double]): Double =
+    lbKeoghEnvEA(query, low, up, Inf)
+
+  /** [[lbKeoghEnv]] with early abandonment, on [[dtwFlatEA]]'s contract:
+    * the partial sum only grows, so once sqrt(partial) STRICTLY exceeds
+    * `cutoff` the bound is provably > cutoff and the scan stops with
+    * PositiveInfinity; otherwise the result is exactly lbKeoghEnv's (same
+    * summation order). A NaN or infinite cutoff never abandons. The
+    * squared pre-check only skips the sqrt; the decision is made in
+    * distance space, like dtwFlatEA's. */
+  def lbKeoghEnvEA(query: Array[Double], low: Array[Double], up: Array[Double],
+                   cutoff: Double): Double = {
+    val cutSq = cutoff * cutoff
     var s = 0.0
     var i = 0
     while (i < query.length) {
       val q = query(i)
       if (q > up(i)) { val d = q - up(i); s += d * d }
       else if (q < low(i)) { val d = low(i) - q; s += d * d }
+      if (s > cutSq && math.sqrt(s) > cutoff) return Double.PositiveInfinity
       i += 1
     }
     math.sqrt(s)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.functions.TsFunctions
+import graft.kernels.Kernels
 
 /** All-pairs metric θ-join machinery — the reference's only join shape
   * (`/root/reference/tslearn/metrics/utils.py:8-85`, SURVEY §2.4).
@@ -136,12 +137,14 @@ object Cdist {
     * bound prunes candidates before the O(n²) DTW runs. `factor` keeps
     * k·factor candidates per probe by LB before the exact metric.
     *
-    * Guarded dispatch: up to `maxIndexRows` train rows the whole
-    * (id, series, envelope) index is broadcast and the plan is
-    * exchange-free (PlanAuditSpec-locked). Beyond that — the driver-memory
+    * Guarded dispatch: up to `maxIndexRows` train rows the driver
+    * collects (id, series), builds every envelope itself and broadcasts
+    * the (id, series, envelope) index, so the plan is exchange-free
+    * (PlanAuditSpec-locked). Beyond that — the driver-memory
     * ceiling the broadcast index would otherwise OOM on at a 100× train
     * scale-up — it degrades to [[knnDtwBlocked]], which shuffles the train
-    * side into block-local indexes and produces IDENTICAL output. */
+    * side into block-local indexes and produces IDENTICAL output. Both
+    * routes pick candidates with the same [[lbCandidates]]. */
   def knnDtwPruned(probes: DataFrame, train: DataFrame, k: Int, radius: Int,
                    factor: Int = 4, seriesCol: String = "values",
                    maxIndexRows: Long = 100000, blocks: Int = 16): DataFrame = {
@@ -163,46 +166,76 @@ object Cdist {
     // envelope) index once and run the whole LB-prune → DTW → top-k per
     // probe inside one kernel call per probe row. Zero shuffles, no n²
     // row stream; each executor scans the index with O(sz) bounds and runs
-    // the O(sz·radius) DTW only for the k·factor LB survivors. Envelopes
-    // are precomputed once per train series (O(sz·radius) each), not per
-    // pair. Same candidate-selection semantics as the former two-window
-    // formulation: k·factor by (lb, id) asc, then k by (dist, id) asc.
+    // the O(sz·radius) DTW only for the k·factor LB survivors. Only
+    // (id, series) is collected: the driver builds the O(sz) envelopes
+    // while it shapes the index, so they never travel in the collect.
     val spark = probes.sparkSession
     import spark.implicits._
-    val index: Array[(Long, Array[Double], Array[Double], Array[Double])] =
-      train.select(col("series_id").cast("long"), col(seriesCol).cast("array<double>"),
-          TsFunctions.envelopeUdf(col(seriesCol), lit(radius)).as("env"))
-        .select(col("series_id"), col("values"), col("env._1"), col("env._2"))
-        .as[(Long, Array[Double], Array[Double], Array[Double])]
-        .collect()
-        .sortBy(_._1)
-    val bc = spark.sparkContext.broadcast(index)
+    val rows = train.select(col("series_id").cast("long"), col(seriesCol).cast("array<double>"))
+      .as[(Long, Array[Double])].collect().sortBy(_._1)
+    val envs = rows.map(r => Kernels.lbEnvelope(r._2, radius))
+    val bc = spark.sparkContext.broadcast(
+      (rows.map(_._1), rows.map(_._2), envs.map(_._1), envs.map(_._2)))
     val kf = k * factor
     val knnUdf = udf((lv: scala.collection.Seq[Double]) => {
       val q = lv.toArray
-      val idx = bc.value
-      // pass 1: LB_Keogh against every train envelope, keep k·factor
-      val lbs = new Array[Double](idx.length)
-      var i = 0
-      while (i < idx.length) {
-        // LB_Keogh is UNDEFINED for unequal lengths (the reference raises,
-        // `dtw_variants.py:1248-1251`): a silent min-length walk would be
-        // a bound of NOTHING and prune true neighbors. Reject loudly.
-        require(idx(i)._3.length == q.length,
-          s"LB_Keogh requires equal-length series (probe sz=${q.length}, " +
-            s"train id=${idx(i)._1} sz=${idx(i)._3.length}); " +
-            "use Cdist.knnDtwRagged for variable-length input")
-        lbs(i) = graft.kernels.Kernels.lbKeoghEnv(q, idx(i)._3, idx(i)._4)
-        i += 1
-      }
-      val cand = (0 until idx.length).sortBy(i => (lbs(i), idx(i)._1)).take(kf)
-      // pass 2: the kth-best cascade over the SAME candidate set
-      cascade(q, cand.map(i => (lbs(i), idx(i)._1, idx(i)._2)), k, radius)
+      val (ids, series, lows, ups) = bc.value
+      val (pos, lbs) = lbCandidates(q, ids, lows, ups, kf)
+      cascade(q, pos.indices.map(j => (lbs(j), ids(pos(j)), series(pos(j)))), k, radius)
     })
     probes.select(col("series_id").as("probe_id"),
         posexplode(knnUdf(col(seriesCol))).as(Seq("rank0", "hit")))
       .select(col("probe_id"), (col("rank0") + 1).as("rank"),
         col("hit._1").as("neighbor_id"), col("hit._2").as("dist"))
+  }
+
+  /** Candidate selection of both LB-pruned kNN routes: the `kf` entries
+    * of an (id, envelope) index with the smallest (LB_Keogh(q), id),
+    * ascending — exactly `sortBy((lb, id)).take(kf)` (lb in Double's
+    * total order), without ranking every entry. A `kf`-slot insertion
+    * buffer holds the best so far; once it is full, each further bound
+    * abandons as soon as its partial sum STRICTLY exceeds the `kf`-th
+    * best ([[Kernels.lbKeoghEnvEA]]), so an abandoned entry could never
+    * have entered and a tie is still computed exactly and ranked by id.
+    * Returns the survivors' positions in the index and their bounds.
+    *
+    * LB_Keogh is UNDEFINED for unequal lengths (the reference raises,
+    * `dtw_variants.py:1248-1251`): a silent min-length walk would be a
+    * bound of NOTHING and prune true neighbors, so every entry's length
+    * is checked before its bound and a mismatch fails loudly. */
+  private[graft] def lbCandidates(q: Array[Double], ids: Array[Long],
+                                  lows: Array[Array[Double]], ups: Array[Array[Double]],
+                                  kf: Int): (Array[Int], Array[Double]) = {
+    val cap = math.max(0, math.min(kf, ids.length))
+    val pos = new Array[Int](cap)
+    val lbs = new Array[Double](cap)
+    // (lb, id) strictly before (lb2, id2), in the tuple sort's order
+    def before(lb: Double, id: Long, lb2: Double, id2: Long): Boolean = {
+      val c = java.lang.Double.compare(lb, lb2)
+      c < 0 || (c == 0 && id < id2)
+    }
+    var n = 0
+    var i = 0
+    while (i < ids.length) {
+      require(lows(i).length == q.length,
+        s"LB_Keogh requires equal-length series (probe sz=${q.length}, " +
+          s"train id=${ids(i)} sz=${lows(i).length}); " +
+          "use Cdist.knnDtwRagged for variable-length input")
+      if (cap > 0) {
+        val cut = if (n == cap) lbs(cap - 1) else Double.PositiveInfinity
+        val lb = Kernels.lbKeoghEnvEA(q, lows(i), ups(i), cut)
+        if (n < cap || before(lb, ids(i), lbs(cap - 1), ids(pos(cap - 1)))) {
+          var p = math.min(n, cap - 1)
+          while (p > 0 && before(lb, ids(i), lbs(p - 1), ids(pos(p - 1)))) {
+            lbs(p) = lbs(p - 1); pos(p) = pos(p - 1); p -= 1
+          }
+          lbs(p) = lb; pos(p) = i
+          if (n < cap) n += 1
+        }
+      }
+      i += 1
+    }
+    (pos, lbs)
   }
 
   /** LB-ordered k-slot early-abandon cascade — shared pass 2 of both
@@ -222,7 +255,7 @@ object Cdist {
     cands.foreach { case (lb, id, tv) =>
       val bsf = if (n == k) ds(k - 1) else Double.PositiveInfinity
       if (!(n == k && lb > bsf)) {
-        val d = graft.kernels.Kernels.dtwFlatEA(q, tv, radius, bsf)
+        val d = Kernels.dtwFlatEA(q, tv, radius, bsf)
         if (n < k || d < ds(k - 1) || (d == ds(k - 1) && id < ids(k - 1))) {
           var p = math.min(n, k - 1)
           while (p > 0 && (ds(p - 1) > d || (ds(p - 1) == d && ids(p - 1) > id))) {
@@ -242,14 +275,16 @@ object Cdist {
     * into `blocks` grouped rows (series stay OUT of the index — they are
     * re-joined for the winners only); probes replicate `blocks`× and
     * equi-join — shuffle volume is blocks·|probes| + |train| rows, never
-    * a pair-space stream and never a full-relation broadcast. The global
-    * merge re-slices the per-block LB survivors to the k·factor best by
-    * (lb, id) — bit-identical candidate selection to the broadcast
-    * path's. Phase 2 equi-joins ONLY those winners' series back by id,
-    * regroups per probe, and runs the same LB-ordered early-abandon
-    * [[cascade]] as the broadcast path: exact DTW work is ≤ k·factor
-    * DPs per probe (it was blocks·k·factor before the two-phase split),
-    * each abandoning at the running kth-best. */
+    * a pair-space stream and never a full-relation broadcast. Each
+    * (probe chunk × block) tile keeps its k·factor best by (lb, id) with
+    * the broadcast route's [[lbCandidates]], and the global merge
+    * re-slices the per-block survivors to the k·factor best — the same
+    * candidate set as the broadcast route's. Phase 2 equi-joins ONLY
+    * those winners' series back by id, regroups per probe, and runs the
+    * same LB-ordered early-abandon [[cascade]] as the broadcast path:
+    * exact DTW work is ≤ k·factor DPs per probe (it was
+    * blocks·k·factor before the two-phase split), each abandoning at
+    * the running kth-best. */
   private[graft] def knnDtwBlocked(probes: DataFrame, train: DataFrame, k: Int, radius: Int,
                                    factor: Int = 4, blocks: Int = 16,
                                    seriesCol: String = "values"): DataFrame = {
@@ -293,26 +328,16 @@ object Cdist {
                      idx: scala.collection.Seq[(Long, scala.collection.Seq[Double],
                        scala.collection.Seq[Double])]) => {
       // ARRAYS, not the converter's Seq: the deserialized Seq can be a
-      // linked list, and an O(i) apply inside the sort comparator turns
-      // the per-probe top-kf into O(n² log n) (measured: every executor
-      // thread stuck in List.drop at the sf1 octave)
-      val index = idx.iterator.map(r => (r._1, r._2.toArray, r._3.toArray)).toArray
-      val lbs = new Array[Double](index.length)
+      // linked list, and an O(i) apply per index entry turns the
+      // per-probe scan quadratic (measured: every executor thread stuck
+      // in List.drop at the sf1 octave)
+      val index = idx.toArray
+      val ids = index.map(_._1)
+      val lows = index.map(_._2.toArray)
+      val ups = index.map(_._3.toArray)
       ps.iterator.flatMap { case (pid, q) =>
-        val qa = q.toArray
-        var i = 0
-        while (i < index.length) {
-          // same equal-length contract as the broadcast route: LB_Keogh
-          // on sz1 != sz2 is not a lower bound (`dtw_variants.py:1248-1251`)
-          require(index(i)._2.length == qa.length,
-            s"LB_Keogh requires equal-length series (probe sz=${qa.length}, " +
-              s"train id=${index(i)._1} sz=${index(i)._2.length}); " +
-              "use Cdist.knnDtwRagged for variable-length input")
-          lbs(i) = graft.kernels.Kernels.lbKeoghEnv(qa, index(i)._2, index(i)._3)
-          i += 1
-        }
-        (0 until index.length).sortBy(i => (lbs(i), index(i)._1)).take(kf)
-          .map(i => (pid, lbs(i), index(i)._1))
+        val (pos, lbs) = lbCandidates(q.toArray, ids, lows, ups, kf)
+        pos.indices.map(j => (pid, lbs(j), ids(pos(j))))
       }.toArray
     })
     // shuffle-hash: this path exists because train exceeds broadcast size

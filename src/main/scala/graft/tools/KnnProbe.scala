@@ -3,6 +3,7 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.functions.TsFunctions
+import graft.kernels.Kernels
 import graft.model.TSModel
 import graft.operators.Cdist
 
@@ -81,35 +82,37 @@ object KnnProbe {
     val parity = a.sameElements(b)
     System.err.println(s"[knnprobe] route parity: $parity (${a.length} rows)")
 
-    // driver-side cascade replay over a probe sample: rates
-    val idx = series.select(col("series_id").cast("long"),
-        col("values").cast("array<double>"),
-        TsFunctions.envelopeUdf(col("values"), lit(radius)).as("env"))
-      .select(col("series_id"), col("values"), col("env._1"), col("env._2"))
+    // driver-side cascade replay over a probe sample: rates. Candidates
+    // come from the operator's own selection (Cdist.lbCandidates); only
+    // the cascade is replayed here, to count its three outcomes.
+    val rows = series.select(col("series_id").cast("long"),
+        col("values").cast("array<double>"))
       .collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray,
-        r.getSeq[Double](2).toArray, r.getSeq[Double](3).toArray))
+      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
       .sortBy(_._1)
-    val sample = idx.take(math.min(idx.length, 500))
+    val ids = rows.map(_._1)
+    val vals = rows.map(_._2)
+    val envs = vals.map(Kernels.lbEnvelope(_, radius))
+    val lows = envs.map(_._1)
+    val ups = envs.map(_._2)
     val kf = k * factor
     var pruned = 0L; var abandoned = 0L; var full = 0L
-    sample.foreach { case (_, q, _, _) =>
-      val lbs = idx.map(t => graft.kernels.Kernels.lbKeoghEnv(q, t._3, t._4))
-      val cand = idx.indices.sortBy(i => (lbs(i), idx(i)._1)).take(kf)
-      val ds = new Array[Double](k); val ids = new Array[Long](k); var m = 0
-      cand.foreach { i =>
+    vals.take(math.min(vals.length, 500)).foreach { q =>
+      val (cand, lbs) = Cdist.lbCandidates(q, ids, lows, ups, kf)
+      val ds = new Array[Double](k); val nb = new Array[Long](k); var m = 0
+      cand.indices.foreach { j =>
         val bsf = if (m == k) ds(k - 1) else Double.PositiveInfinity
-        if (m == k && lbs(i) > bsf) pruned += 1
+        if (m == k && lbs(j) > bsf) pruned += 1
         else {
-          val d = graft.kernels.Kernels.dtwFlatEA(q, idx(i)._2, radius, bsf)
+          val d = Kernels.dtwFlatEA(q, vals(cand(j)), radius, bsf)
           if (d.isPosInfinity) abandoned += 1 else full += 1
-          val id = idx(i)._1
-          if (m < k || d < ds(k - 1) || (d == ds(k - 1) && id < ids(k - 1))) {
+          val id = ids(cand(j))
+          if (m < k || d < ds(k - 1) || (d == ds(k - 1) && id < nb(k - 1))) {
             var p = math.min(m, k - 1)
-            while (p > 0 && (ds(p - 1) > d || (ds(p - 1) == d && ids(p - 1) > id))) {
-              ds(p) = ds(p - 1); ids(p) = ids(p - 1); p -= 1
+            while (p > 0 && (ds(p - 1) > d || (ds(p - 1) == d && nb(p - 1) > id))) {
+              ds(p) = ds(p - 1); nb(p) = nb(p - 1); p -= 1
             }
-            ds(p) = d; ids(p) = id
+            ds(p) = d; nb(p) = id
             if (m < k) m += 1
           }
         }

@@ -64,6 +64,16 @@ class BenchGuardSpec extends AnyFunSuite {
       == "BENCH_LOCAL_ALTSF.json")
   }
 
+  test("record routing: a non-numeric SPARK_GRAFT_CPUS never reaches a file name") {
+    // `local[*]`-style values carry '[' '*' ']' — no path characters may
+    // leak into the side-file name; only digits survive
+    for (cpus <- Seq("*", "local[*]"))
+      assert(Bench.targetFor(subsetRun = false, cpus = cpus, canonCpus = "32",
+        loadWarn = false, cleanOnDisk = true) == "BENCH_LOCAL_C_NONNUMERIC.json", cpus)
+    assert(Bench.targetFor(subsetRun = false, cpus = "local[8]", canonCpus = "32",
+      loadWarn = false, cleanOnDisk = true) == "BENCH_LOCAL_C8.json")
+  }
+
   test("per-query repeat divergence (VERDICT r16 #2)") {
     // the r16 canonical's emb_silhouette shape: one 8.4x-spiked repeat
     assert(Bench.divergence(Seq(0.34, 2.88)) > Bench.divergenceLimit)

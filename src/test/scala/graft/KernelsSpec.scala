@@ -118,6 +118,80 @@ class KernelsSpec extends AnyFunSuite {
     assert(approx(lb, 2.8284271247461903, 1e-9))
   }
 
+  /** The O(sz·r) window scan lbEnvelope replaced: the bit-level reference. */
+  private def scanEnvelope(ts: Array[Double], radius: Int): (Array[Double], Array[Double]) = {
+    val n = ts.length
+    val low = new Array[Double](n)
+    val up = new Array[Double](n)
+    var i = 0
+    while (i < n) {
+      var mn = Double.PositiveInfinity; var mx = Double.NegativeInfinity
+      var j = math.max(0, i - radius)
+      val end = math.min(n - 1, i + radius)
+      while (j <= end) {
+        if (ts(j) < mn) mn = ts(j)
+        if (ts(j) > mx) mx = ts(j)
+        j += 1
+      }
+      low(i) = mn; up(i) = mx
+      i += 1
+    }
+    (low, up)
+  }
+
+  private def sameBits(a: Array[Double], b: Array[Double]): Boolean =
+    a.length == b.length && a.indices.forall(i =>
+      java.lang.Double.doubleToRawLongBits(a(i)) == java.lang.Double.doubleToRawLongBits(b(i)))
+
+  private def assertEnvelopeBits(ts: Array[Double], radius: Int): Unit = {
+    val (low, up) = Kernels.lbEnvelope(ts, radius)
+    val (wantLow, wantUp) = scanEnvelope(ts, radius)
+    val clue = s"ts=${ts.mkString("[", ",", "]")} radius=$radius"
+    assert(sameBits(low, wantLow), s"low ${low.mkString(",")} $clue")
+    assert(sameBits(up, wantUp), s"up ${up.mkString(",")} $clue")
+  }
+
+  test("lbEnvelope is bit-identical to the O(sz·r) window scan on degenerate input") {
+    val nan = Double.NaN; val inf = Double.PositiveInfinity
+    val cases = Seq(
+      Array.empty[Double],
+      Array(3.5),
+      Array(nan),
+      Array(nan, nan, nan, 1.0, nan, nan, nan, nan), // all-NaN windows at r <= 2
+      Array(0.0, -0.0, 0.0, -0.0, -0.0, 0.0),        // ±0.0 ties: first one's bits
+      Array(-0.0, 0.0, nan, 0.0, -0.0),
+      Array(inf, -inf, inf, 1.0, -inf, nan, inf),
+      Array(inf, inf, inf), Array(-inf, -inf),
+      Array(2.0, 2.0, 1.0, 1.0, 2.0, 1.0))
+    for (ts <- cases; r <- Seq(-1, 0, 1, 2, ts.length - 1, ts.length, ts.length + 3))
+      assertEnvelopeBits(ts, r)
+  }
+
+  test("lbEnvelope is bit-identical to the O(sz·r) window scan (seeded adversarial fuzz)") {
+    val rng = new scala.util.Random(7)
+    val pool = Array(Double.NaN, 0.0, -0.0, Double.PositiveInfinity, Double.NegativeInfinity,
+      1.0, -1.0, 2.0)
+    for (_ <- 1 to 5000) {
+      val n = rng.nextInt(41)
+      val ts = Array.fill(n)(if (rng.nextInt(3) == 0) rng.nextGaussian() else pool(rng.nextInt(pool.length)))
+      assertEnvelopeBits(ts, rng.nextInt(13) - 1)
+    }
+  }
+
+  test("lbKeoghEnvEA: exactly lbKeoghEnv up to the cutoff, +Inf only strictly past it") {
+    val rng = new scala.util.Random(11)
+    for (_ <- 1 to 200) {
+      val n = 1 + rng.nextInt(30)
+      val (low, up) = Kernels.lbEnvelope(Array.fill(n)(rng.nextGaussian()), rng.nextInt(4))
+      val q = Array.fill(n)(2 * rng.nextGaussian())
+      val lb = Kernels.lbKeoghEnv(q, low, up)
+      // a tie with the cutoff is computed exactly (the kth-best tie rule)
+      for (cut <- Seq(lb, Math.nextUp(lb), Double.PositiveInfinity, Double.NaN))
+        assert(Kernels.lbKeoghEnvEA(q, low, up, cut) == lb, s"cut=$cut lb=$lb")
+      if (lb > 0) assert(Kernels.lbKeoghEnvEA(q, low, up, Math.nextDown(lb)).isPosInfinity)
+    }
+  }
+
   test("lb_keogh lower-bounds dtw (property)") {
     val rng = new scala.util.Random(42)
     for (_ <- 1 to 50) {
