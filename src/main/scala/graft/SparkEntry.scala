@@ -540,51 +540,13 @@ object SparkEntry {
         .select(col("keep_id"), col("n_copies"))
     }),
 
-    "doc_jaccard_pairs" -> ((s, dir) => {
-      // word 3-gram shingle Jaccard near-dup join via inverted index.
-      // Shingles above a doc-frequency cap are dropped from the metric
-      // (both here and in the oracle): a hot shingle — a stop-word
-      // 3-gram in >maxDf docs — would make its inverted-index bucket
-      // quadratic; capping bounds every bucket at maxDf² pairs.
-      val maxDf = 100
-      // <3-word docs have no 3-grams (oracle: j ≤ len−2)
-      val d = docs(s, dir).select(col("doc_id"), col("text"))
-        .where(size(split(col("text"), " ")) >= 3)
-      // shingle construction + per-doc distinct + 60-bit portable hash
-      // in ONE native pass over the text bytes (ShingleHash60Expression
-      // — no intermediate shingle strings, no interpreted HOF chain);
-      // the checkpoint, the df-cap groupBy and the inverted-index join
-      // then all carry an 8-byte key instead of a ~20-byte string.
-      // Internal only — the output never exposes the shingle, so the
-      // oracle is unchanged (a 60-bit collision at 450 k distinct
-      // shingles is ~1e-7 and would only merge two index buckets).
-      val raw = d.select(col("doc_id"),
-        explode(graft.functions.NativeExpressions.shingleHash60Native(
-          col("text"), k = 3)).as("sh"))
-      // df cap via Dedup.dfCapped: skew-immune groupBy df + broadcast
-      // anti-join of the hot set (see its scaladoc; plan-locked in
-      // PlanAuditSpec). localCheckpoint the RAW stream, not the capped
-      // one: dfCapped consumes its input twice (hot-set groupBy + the
-      // anti-join) and the capped result three more times (both
-      // self-join sides + sizes) — checkpointing before the cap means
-      // shingle generation runs exactly once and every later pass is a
-      // cheap in-memory scan + broadcast anti (Prof: 8.4 s → 4.3 s
-      // cold). localCheckpoint, not persist, so the blocks are released
-      // by the context cleaner instead of pinned for the rest of a
-      // 60+-query Bench session.
-      val shingles = graft.operators.Dedup.dfCapped(raw.localCheckpoint(), maxDf)
-        .select(col("doc_id"), col("sh"))
-      val sizes = shingles.groupBy("doc_id").agg(count(lit(1)).as("sz"))
-      val a = shingles.select(col("doc_id").as("doc_a"), col("sh"))
-      val b = shingles.select(col("doc_id").as("doc_b"), col("sh"))
-      a.join(b, "sh").where(col("doc_a") < col("doc_b"))
-        .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("inter"))
-        .join(sizes.select(col("doc_id").as("doc_a"), col("sz").as("sz_a")), "doc_a")
-        .join(sizes.select(col("doc_id").as("doc_b"), col("sz").as("sz_b")), "doc_b")
-        .withColumn("jac", col("inter") / (col("sz_a") + col("sz_b") - col("inter")))
-        .where(col("jac") >= 0.5)
-        .select(col("doc_a"), col("doc_b"), round(col("jac"), 4).as("jac"))
-    }),
+    // word 3-gram shingle Jaccard near-dup join via the capped inverted
+    // index. Shingles above a doc-frequency cap (100) are dropped from
+    // the metric both here and in the oracle; <3-word docs have no
+    // 3-grams (oracle: j ≤ len−2).
+    "doc_jaccard_pairs" -> ((s, dir) =>
+      graft.operators.Dedup.jaccardPairs(docs(s, dir), threshold = 0.5)
+        .select(col("doc_a"), col("doc_b"), round(col("jac"), 4).as("jac"))),
 
     // Directional containment — the quote/near-subset detector Jaccard
     // misses (short-in-long quotes: containment ≈ 1, Jaccard low).
@@ -1712,12 +1674,12 @@ object SparkEntry {
           (round(col("d2"), 4) + lit(0.0)).as("d2"))
     }),
 
-    // IVF-PQ with the production exact-rerank stage (round 12, AnnProbe:
-    // pure ADC saturates ~0.5 recall@10 at 1 M from 8-byte quantization
-    // error; the rerank equi-joins ONLY the ADC shortlist's exact
-    // vectors back — rerank·|queries| rows, never the corpus): same
-    // pinned quantizer/codebooks, ADC top-20 shortlist, exact cosine
-    // re-ranks to the final 5.
+    // IVF-PQ with the production exact-rerank stage (SCALEPROBE.md
+    // round 12, fifth probe: pure ADC saturates ~0.5 recall@10 at 1 M
+    // from 8-byte quantization error; the rerank equi-joins ONLY the ADC
+    // shortlist's exact vectors back — rerank·|queries| rows, never the
+    // corpus): same pinned quantizer/codebooks, ADC top-20 shortlist,
+    // exact cosine re-ranks to the final 5.
     "emb_ann_ivfpq_rr" -> ((s, dir) => {
       val e = emb(s, dir).select(col("vec_id"),
         transform(col("embedding"), x => x.cast("double")).as("v"))
@@ -3566,6 +3528,37 @@ object SparkEntry {
        |  FROM r0 JOIN st USING (user_id)
        |)""".stripMargin
 
+  /** The default CTE policy of the chain oracles: every non-recursive
+    * CTE opening a line (`WITH x AS (`, `, x AS (`, `), x AS (`) becomes
+    * `x AS MATERIALIZED (`. DuckDB inlines single-reference CTEs, so an
+    * unrolled DP/Lloyd chain would otherwise re-expand its whole
+    * upstream into every layer. */
+  private def materialized(sql: String): String =
+    sql.replaceAll("(?m)^(WITH |, |\\), )(\\w+) AS \\($", "$1$2 AS MATERIALIZED (")
+
+  /** The Lloyd assign/update CTE pairs `<p>a<i>` / `<p>c<i>` for
+    * i = 1..iters of a k-means trace, reading `<p>c0` (the caller's
+    * init block). Assignment tie-break (d2, cell) matches assignDs's
+    * strict `<` (lowest cell wins). */
+  private def lloydLayers(p: String, iters: Int): String =
+    (1 to iters).map { i =>
+      s"""
+         |, ${p}a$i AS (
+         |  SELECT user_id, cell FROM (
+         |    SELECT r.user_id, s.cell,
+         |      sum((r.val - s.c) * (r.val - s.c)) AS d2,
+         |      row_number() OVER (PARTITION BY r.user_id
+         |        ORDER BY sum((r.val - s.c) * (r.val - s.c)), s.cell) AS rn
+         |    FROM r JOIN ${p}c${i - 1} s ON s.j = r.j
+         |    GROUP BY 1, 2)
+         |  WHERE rn = 1
+         |), ${p}c$i AS (
+         |  SELECT a.cell, r.j, avg(r.val) AS c
+         |  FROM r JOIN ${p}a$i a ON a.user_id = r.user_id
+         |  GROUP BY 1, 2
+         |)""".stripMargin
+    }.mkString
+
   /** DuckDB oracle for ts_kmeans: the full Lloyd trace unrolled as
     * `iters` assign/update CTE pairs — exactly the estimator's loop with
     * init="first" (seeds = series 0..3) and no early stop. Assignment
@@ -3574,24 +3567,7 @@ object SparkEntry {
   private def kmeansTraceSql(iters: Int): String = {
     val sb = new StringBuilder(evCte + resampleZnormCte(32))
     sb ++= "\n, c0 AS (\n  SELECT CAST(user_id AS INT) AS cell, j, val AS c FROM r WHERE user_id < 4\n)"
-    for (i <- 1 to iters) {
-      sb ++=
-        s"""
-           |, a$i AS (
-           |  SELECT user_id, cell FROM (
-           |    SELECT r.user_id, s.cell,
-           |      sum((r.val - s.c) * (r.val - s.c)) AS d2,
-           |      row_number() OVER (PARTITION BY r.user_id
-           |        ORDER BY sum((r.val - s.c) * (r.val - s.c)), s.cell) AS rn
-           |    FROM r JOIN c${i - 1} s ON s.j = r.j
-           |    GROUP BY 1, 2)
-           |  WHERE rn = 1
-           |), c$i AS (
-           |  SELECT a.cell, r.j, avg(r.val) AS c
-           |  FROM r JOIN a$i a ON a.user_id = r.user_id
-           |  GROUP BY 1, 2
-           |)""".stripMargin
-    }
+    sb ++= lloydLayers("", iters)
     sb ++=
       s"""
          |SELECT user_id AS series_id, cell AS cluster,
@@ -3606,7 +3582,7 @@ object SparkEntry {
     // MATERIALIZED: DuckDB inlines single-reference CTEs, and the
     // a/c chain would re-inline the whole resample pipeline into every
     // iteration layer (measured 560 s vs ~1 s for the 10-step trace).
-    sb.toString.replaceAll("(?m)^(WITH |, |\\), )(\\w+) AS \\($", "$1$2 AS MATERIALIZED (")
+    materialized(sb.toString)
   }
 
   /** DuckDB oracle for ts_kmeans_dtw — the metric="dtw" Lloyd fit
@@ -3706,7 +3682,7 @@ object SparkEntry {
          |  round(sqrt(x.cost), 4) + 0.0 AS dist
          |FROM asg$iters a
          |JOIN a${iters}x$last x ON x.user_id = a.user_id AND x.c = a.c AND x.j = $last""".stripMargin
-    sb.toString.replaceAll("(?m)^(WITH |, |\\), )(\\w+) AS \\($", "$1$2 AS MATERIALIZED (")
+    materialized(sb.toString)
       .replaceAll(", (path\\d+) AS MATERIALIZED \\(", ", $1 AS (")
   }
 
@@ -3722,24 +3698,7 @@ object SparkEntry {
       val off = seed * k
       sb ++= s"\n, s${seed}c0 AS (\n  SELECT CAST(user_id - $off AS INT) AS cell, j, val AS c" +
         s" FROM r WHERE user_id >= $off AND user_id < ${off + k}\n)"
-      for (i <- 1 to iters) {
-        sb ++=
-          s"""
-             |, s${seed}a$i AS (
-             |  SELECT user_id, cell FROM (
-             |    SELECT r.user_id, s.cell,
-             |      sum((r.val - s.c) * (r.val - s.c)) AS d2,
-             |      row_number() OVER (PARTITION BY r.user_id
-             |        ORDER BY sum((r.val - s.c) * (r.val - s.c)), s.cell) AS rn
-             |    FROM r JOIN s${seed}c${i - 1} s ON s.j = r.j
-             |    GROUP BY 1, 2)
-             |  WHERE rn = 1
-             |), s${seed}c$i AS (
-             |  SELECT a.cell, r.j, avg(r.val) AS c
-             |  FROM r JOIN s${seed}a$i a ON a.user_id = r.user_id
-             |  GROUP BY 1, 2
-             |)""".stripMargin
-      }
+      sb ++= lloydLayers(s"s$seed", iters)
       sb ++=
         s"""
            |, s${seed}in AS (
@@ -3770,7 +3729,7 @@ object SparkEntry {
          |${predictSql(0)}
          |UNION ALL
          |${predictSql(1)}""".stripMargin
-    sb.toString.replaceAll("(?m)^(WITH |, |\\), )(\\w+) AS \\($", "$1$2 AS MATERIALIZED (")
+    materialized(sb.toString)
   }
 
   /** DuckDB oracle for ts_early_classify — the per-t nearest-centroid
@@ -3896,7 +3855,7 @@ object SparkEntry {
     // DP step references its predecessor twice — inlining would expand
     // the 32-step chain into an exponential tree of events.parquet scans
     // ("Too many open files" long before any result).
-    sb.toString.replaceAll("(?m)^(WITH |, |\\), )(\\w+) AS \\($", "$1$2 AS MATERIALIZED (")
+    materialized(sb.toString)
   }
 
   /** DuckDB oracle for ts_dtw_mv_pairs: build the d=2 (value, Δt)
@@ -4003,7 +3962,7 @@ object SparkEntry {
       s"""
          |SELECT pr AS user_id, round(sqrt(cost), 4) + 0.0 AS ctw
          |FROM cumc$rounds WHERE i = $last AND j = $last""".stripMargin
-    sb.toString.replaceAll("(?m)^(WITH |, |\\), )(\\w+) AS \\($", "$1$2 AS MATERIALIZED (")
+    materialized(sb.toString)
       .replaceAll(", (pathc\\d+) AS MATERIALIZED \\(", ", $1 AS (")
   }
 
@@ -4415,7 +4374,7 @@ object SparkEntry {
          |JOIN sbdf ON sbdf.pr = dd.pr AND sbdf.cd = dd.cd
          |JOIN c${ctwRounds}x$last cc ON cc.pr = dd.pr AND cc.cd = dd.cd AND cc.j = $last
          |WHERE dd.j = $last""".stripMargin
-    sb.toString.replaceAll("(?m)^(WITH |, |\\), )(\\w+) AS \\($", "$1$2 AS MATERIALIZED (")
+    materialized(sb.toString)
       .replaceAll(", (cpath\\d+) AS MATERIALIZED \\(", ", $1 AS (")
   }
 
@@ -4475,7 +4434,7 @@ object SparkEntry {
          |SELECT u.pr AS user_id, round(sqrt(u.cost), 4) AS dtw
          |FROM ans u JOIN lens ln ON ln.pr = u.pr
          |WHERE u.i = ln.len1 - 1 AND u.j = ln.len2 - 1""".stripMargin
-    sb.toString.replaceAll("(?m)^(WITH |, |\\), )(\\w+) AS \\($", "$1$2 AS MATERIALIZED (")
+    materialized(sb.toString)
   }
 
   /** DuckDB oracle for knn_dtw_ragged — all ordered pairs of the
@@ -4546,7 +4505,7 @@ object SparkEntry {
          |      ORDER BY round(dist, 4), cd) AS rn
          |  FROM dtw)
          |WHERE pr <> cd AND rn <= $keep AND (SELECT ok FROM guard) = 1""".stripMargin
-    sb.toString.replaceAll("(?m)^(WITH |, |\\), )(\\w+) AS \\($", "$1$2 AS MATERIALIZED (")
+    materialized(sb.toString)
   }
 
   /** d=2 (value, Δt) channel prep shared by the multivariate oracles
@@ -4635,7 +4594,7 @@ object SparkEntry {
          |FROM t$last WHERE j = $last""".stripMargin
     // MATERIALIZED for the same reason as knnDtwOracleSql: each DP step
     // references its predecessor twice.
-    sb.toString.replaceAll("(?m)^(WITH |, |\\), )(\\w+) AS \\($", "$1$2 AS MATERIALIZED (")
+    materialized(sb.toString)
   }
 
   /** DuckDB oracle for ts_lcss_pairs: the ε-LCSS DP unrolled as a
@@ -4700,7 +4659,7 @@ object SparkEntry {
       s"""
          |SELECT pr AS user_id, CAST(len AS INT) AS lcss_len
          |FROM t${sz - 1} WHERE j = ${sz - 1}""".stripMargin
-    sb.toString.replaceAll("(?m)^(WITH |, |\\), )(\\w+) AS \\($", "$1$2 AS MATERIALIZED (")
+    materialized(sb.toString)
   }
 
   /** DuckDB oracle for ts_dtw_itakura_pairs: the banded min-plus chain
@@ -4766,7 +4725,7 @@ object SparkEntry {
       s"""
          |SELECT pr AS user_id, round($finalExpr, 4) AS dtw
          |FROM t$last WHERE j = $last""".stripMargin
-    sb.toString.replaceAll("(?m)^(WITH |, |\\), )(\\w+) AS \\($", "$1$2 AS MATERIALIZED (")
+    materialized(sb.toString)
   }
 
   /** DuckDB oracle for ts_lcss_path_pairs: the LCSS alignment path
@@ -4838,7 +4797,7 @@ object SparkEntry {
          |JOIN loc m ON m.pr = p.pr AND m.cd = p.cd
          |  AND m.i = p.pi - 1 AND m.j = p.pj - 1
          |WHERE p.pi > 0 AND p.pj > 0 AND m.m = 1""".stripMargin
-    sb.toString.replaceAll("(?m)^(WITH |, |\\), )(\\w+) AS \\($", "$1$2 AS MATERIALIZED (")
+    materialized(sb.toString)
       .replace(", path AS MATERIALIZED (", ", path AS (")
   }
 
@@ -4907,7 +4866,7 @@ object SparkEntry {
          |SELECT u.pr AS user_id, CAST(u.len AS INT) AS lcss_len
          |FROM ans u JOIN lens ln ON ln.pr = u.pr
          |WHERE u.i = ln.len1 - 1 AND u.j = ln.len2 - 1""".stripMargin
-    sb.toString.replaceAll("(?m)^(WITH |, |\\), )(\\w+) AS \\($", "$1$2 AS MATERIALIZED (")
+    materialized(sb.toString)
   }
 
   /** DuckDB oracle for ts_1dsax_pairs (`cysax.pyx:95-124`): per-user
@@ -5140,7 +5099,7 @@ object SparkEntry {
          |  SELECT pr, cd, lw FROM t${sz - 1} WHERE j = ${sz - 1}
          |)
          |$finalSql""".stripMargin
-    sb.toString.replaceAll("(?m)^(WITH |, |\\), )(\\w+) AS \\($", "$1$2 AS MATERIALIZED (")
+    materialized(sb.toString)
   }
 
   /** Ragged variant of [[sumProdChainSql]]: each series is resampled to
@@ -5246,7 +5205,7 @@ object SparkEntry {
          |  WHERE a.i = ln.l1 - 1 AND a.j = ln.l2 - 1
          |)
          |$finalSql""".stripMargin
-    sb.toString.replaceAll("(?m)^(WITH |, |\\), )(\\w+) AS \\($", "$1$2 AS MATERIALIZED (")
+    materialized(sb.toString)
   }
 
   /** DuckDB oracle for cdist_dtw_pairs: unbanded univariate DTW between
@@ -5255,11 +5214,10 @@ object SparkEntry {
     * an all-pairs join, verifying the triangle self-join output. */
   private def cdistDtwOracleSql(sz: Int, maxId: Int): String = {
     val last = sz - 1
-    (cdistDtwChainSql(sz, maxId) +
+    materialized(cdistDtwChainSql(sz, maxId) +
       s"""
          |SELECT pr AS left_id, cd AS right_id, round(sqrt(cost), 4) AS dtw
          |FROM t$last WHERE j = $last""".stripMargin)
-      .replaceAll("(?m)^(WITH |, |\\), )(\\w+) AS \\($", "$1$2 AS MATERIALIZED (")
   }
 
   /** DuckDB oracle for ts_silhouette_dtw: the cdist DTW triangle chain
@@ -5269,7 +5227,7 @@ object SparkEntry {
     * `clustering/utils.py:66-197`. */
   private def silhouetteDtwOracleSql(sz: Int, maxId: Int): String = {
     val last = sz - 1
-    (cdistDtwChainSql(sz, maxId) +
+    materialized(cdistDtwChainSql(sz, maxId) +
       s"""
          |, pd AS (
          |  SELECT pr, cd, sqrt(cost) AS dist FROM t$last WHERE j = $last
@@ -5295,7 +5253,6 @@ object SparkEntry {
          |  FROM aa JOIN bb ON aa.l = bb.l
          |)
          |SELECT round(avg(s), 4) AS silhouette FROM sil""".stripMargin)
-      .replaceAll("(?m)^(WITH |, |\\), )(\\w+) AS \\($", "$1$2 AS MATERIALIZED (")
   }
 
   /** Shared all-pairs (a < b triangle) DTW DP chain over the first
@@ -5411,7 +5368,7 @@ object SparkEntry {
          |)
          |SELECT pr AS user_id, CAST(i AS INT) AS i, CAST(j AS INT) AS j
          |FROM path""".stripMargin
-    sb.toString.replaceAll("(?m)^(WITH |, |\\), )(\\w+) AS \\($", "$1$2 AS MATERIALIZED (")
+    materialized(sb.toString)
       .replace(", path AS MATERIALIZED (", ", path AS (")
   }
 
@@ -5535,7 +5492,7 @@ object SparkEntry {
          |    AND l.i = f.i AND l.j = f.j
          |  JOIN fin fn ON fn.pr = f.pr AND fn.cd = f.cd
          |)""".stripMargin
-    sb.toString.replaceAll("(?m)^(WITH |, |\\), )(\\w+) AS \\($", "$1$2 AS MATERIALIZED (")
+    materialized(sb.toString)
   }
 
   /** DuckDB oracle for ts_softdtw_bary_step — one gradient-descent step
@@ -5597,7 +5554,7 @@ object SparkEntry {
          |)
          |SELECT g.t, round(b.val - $eta * g.gsum, 4) + 0.0 AS b_new
          |FROM g JOIN binit b ON b.j = g.t""".stripMargin
-    sb.toString.replaceAll("(?m)^(WITH |, |\\), )(\\w+) AS \\($", "$1$2 AS MATERIALIZED (")
+    materialized(sb.toString)
   }
 
   /** DuckDB oracle for ts_kmeans_softdtw — the metric="softdtw" k-means
@@ -5693,7 +5650,7 @@ object SparkEntry {
          |SELECT user_id AS series_id, c AS cluster,
          |  round(dist, 4) + 0.0 AS dist
          |FROM asg$iters""".stripMargin
-    sb.toString.replaceAll("(?m)^(WITH |, |\\), )(\\w+) AS \\($", "$1$2 AS MATERIALIZED (")
+    materialized(sb.toString)
   }
 
   /** DuckDB oracle shared by doc_cms_heavy and doc_stream_cms (the
@@ -5796,7 +5753,7 @@ object SparkEntry {
            |)""".stripMargin
     }
     sb ++= assignCte("fin", s"c$iters")
-    sb.toString.replaceAll("(?m)^(WITH |, |\\), )(\\w+) AS \\($", "$1$2 AS MATERIALIZED (")
+    materialized(sb.toString)
   }
 
   /** Shared CTE chain of the raw (scale=false) matrix-profile oracles:
@@ -6057,7 +6014,7 @@ object SparkEntry {
            |UNION ALL SELECT $rr, cid, round(pot, 4) + 0.0 FROM b$rr""".stripMargin
     // MATERIALIZED: inlined, each of the ~k·sz DP layers re-expands its
     // whole upstream (and re-opens the parquet per reference)
-    sb.toString.replaceAll("(?m)^(WITH |, |\\), )(\\w+) AS \\($", "$1$2 AS MATERIALIZED (")
+    materialized(sb.toString)
   }
 
   /** DuckDB oracle for emb_pca_project — the full PCA pipeline
@@ -6067,7 +6024,7 @@ object SparkEntry {
     * iterate), Rayleigh eigenvalue, sums·v sign fix, Hotelling
     * deflation between components, and the centered projection. */
   private def pcaProjectOracleSql(d: Int, steps: Int,
-                                  whiten: Boolean = false): String = {
+                                  whiten: Boolean = false): String = materialized {
     val c0 = (d - 1) / 2.0
     var n2 = 0.0
     var jj = 0
@@ -6145,7 +6102,7 @@ object SparkEntry {
          |JOIN v1 ON v1.j = x.j
          |JOIN v2 ON v2.j = x.j
          |GROUP BY x.vec_id""".stripMargin
-  }.replaceAll("(?m)^(WITH |, |\\), )(\\w+) AS \\($", "$1$2 AS MATERIALIZED (")
+  }
 
   private def bpeOracleFinish(sql: String): String = sql
     .replaceAll("(?m)^(WITH RECURSIVE |, )(\\w+) AS \\($", "$1$2 AS MATERIALIZED (")
@@ -6328,7 +6285,7 @@ object SparkEntry {
       s"""
          |SELECT l.id AS series_id, l.c AS cluster, round(d.d2, 4) + 0.0 AS d2
          |FROM lab$iters l JOIN d_$iters d ON d.id = l.id AND d.c = l.c""".stripMargin
-    sb.toString.replaceAll("(?m)^(WITH |, |\\), )(\\w+) AS \\($", "$1$2 AS MATERIALIZED (")
+    materialized(sb.toString)
   }
 
   private def kernelKMeansTraceSql(sz: Int, maxId: Int, k: Int, iters: Int): String =
@@ -6419,7 +6376,7 @@ object SparkEntry {
          |)
          |SELECT pr AS user_id, round(sqrt(min(cost)), 4) AS ldtw
          |FROM fin GROUP BY pr""".stripMargin
-    sb.toString.replaceAll("(?m)^(WITH |, |\\), )(\\w+) AS \\($", "$1$2 AS MATERIALIZED (")
+    materialized(sb.toString)
   }
 
   /** DuckDB oracle for ts_ldtw_path_pairs — the L-DTW backtrack
@@ -6575,7 +6532,7 @@ object SparkEntry {
          |    row_number() OVER (PARTITION BY pr ORDER BY cost, j) AS rn
          |  FROM t${qsz - 1})
          |WHERE rn = 1""".stripMargin
-    sb.toString.replaceAll("(?m)^(WITH |, |\\), )(\\w+) AS \\($", "$1$2 AS MATERIALIZED (")
+    materialized(sb.toString)
   }
 
   /** DuckDB oracle for ts_kshape_assign: SBD of every series to the four
@@ -6839,7 +6796,7 @@ object SparkEntry {
          |  round(l1.l - l0.l, 4) + 0.0 AS margin
          |FROM pl l0 JOIN pl l1 ON l1.user_id = l0.user_id
          |WHERE l0.c = 0 AND l1.c = 1""".stripMargin
-    sb.toString.replaceAll("(?m)^(WITH |, |\\), )(\\w+) AS \\($", "$1$2 AS MATERIALIZED (")
+    materialized(sb.toString)
   }
 
   /** DuckDB oracle for ts_kshape_step — the full shape-extraction update
@@ -6984,7 +6941,7 @@ object SparkEntry {
          |FROM signedv s JOIN fstats f USING (cluster)""".stripMargin
     // materialize the shared layers; the pv chain is small but each step
     // references the previous one once — materialize those too
-    sb.toString.replaceAll("(?m)^(WITH |, |\\), )(\\w+) AS \\($", "$1$2 AS MATERIALIZED (")
+    materialized(sb.toString)
   }
 
   /** DuckDB oracle for ts_kshape: the FULL `iters`-iteration fit trace —
@@ -7149,7 +7106,7 @@ object SparkEntry {
          |    row_number() OVER (PARTITION BY user_id ORDER BY d, cluster) AS rn
          |  FROM sbdF)
          |WHERE rn = 1""".stripMargin
-    sb.toString.replaceAll("(?m)^(WITH |, |\\), )(\\w+) AS \\($", "$1$2 AS MATERIALIZED (")
+    materialized(sb.toString)
   }
 
   /** DuckDB oracle for ts_dba: the FULL `iters`-iteration MM trace —
@@ -7230,7 +7187,7 @@ object SparkEntry {
     // + 0.0 collapses IEEE −0.0 to 0.0 (same discipline as ts_kshape_*)
     sb ++= s"\nSELECT CAST(i AS INT) AS t, round(bv, 4) + 0.0 AS v FROM bar$iters"
     // materialize every DP-chain CTE, but never the recursive paths
-    sb.toString.replaceAll("(?m)^(WITH |, |\\), )(\\w+) AS \\($", "$1$2 AS MATERIALIZED (")
+    materialized(sb.toString)
       .replaceAll(", (path\\d+) AS MATERIALIZED \\(", ", $1 AS (")
   }
 
@@ -7261,7 +7218,7 @@ object SparkEntry {
 
   // materialize the DP chain, but never the recursive CTE itself
   private def dbaStepMaterialize(sql: String): String =
-    sql.replaceAll("(?m)^(WITH |, |\\), )(\\w+) AS \\($", "$1$2 AS MATERIALIZED (")
+    materialized(sql)
       .replace(", path AS MATERIALIZED (", ", path AS (")
 
   /** Shared ts_dba_step / ts_dba_ssg_step chain: everything through the

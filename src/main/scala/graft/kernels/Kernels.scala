@@ -66,36 +66,10 @@ object Kernels {
 
   /** Univariate flat-array DTW (no per-timestep array wrappers) — the
     * hot-path kernel behind the native Catalyst expression. radius < 0
-    * means unconstrained; radius ≥ 0 applies the Sakoe-Chiba band. */
-  def dtwFlat(a: Array[Double], b: Array[Double], radius: Int): Double = {
-    val l1 = a.length; val l2 = b.length
-    if (l1 == 0 || l2 == 0) return Double.NaN
-    val bounds = if (radius < 0) null else Mask.sakoeChiba(l1, l2, radius)
-    var prev = new Array[Double](l2 + 1)
-    var cur = new Array[Double](l2 + 1)
-    java.util.Arrays.fill(prev, Inf)
-    prev(0) = 0.0
-    var i = 1
-    while (i <= l1) {
-      java.util.Arrays.fill(cur, Inf)
-      val lo = if (bounds == null) 0 else bounds.lo(i - 1)
-      val hi = if (bounds == null) l2 - 1 else bounds.hi(i - 1)
-      val ai = a(i - 1)
-      var j = lo + 1
-      val jEnd = hi + 1
-      while (j <= jEnd) {
-        val diff = ai - b(j - 1)
-        var m = prev(j)
-        if (cur(j - 1) < m) m = cur(j - 1)
-        if (prev(j - 1) < m) m = prev(j - 1)
-        cur(j) = diff * diff + m
-        j += 1
-      }
-      val t = prev; prev = cur; cur = t
-      i += 1
-    }
-    math.sqrt(prev(l2))
-  }
+    * means unconstrained; radius ≥ 0 applies the Sakoe-Chiba band. This
+    * is the cutoff = +Inf (never abandon) case of [[dtwFlatEA]]. */
+  def dtwFlat(a: Array[Double], b: Array[Double], radius: Int): Double =
+    dtwFlatEA(a, b, radius, Inf)
 
   /** [[dtwFlat]] with early abandonment — the UCR-suite cascade the
     * reference reaches via LB pruning (`dtw_variants.py:1224-1296`):
@@ -106,11 +80,16 @@ object Kernels {
     * abandonment (callers read it as "worse than the current kth
     * best"), else exactly dtwFlat's value. Abandonment is STRICT (>):
     * a candidate tying the cutoff is computed exactly, so (dist, id)
-    * tie-ranking downstream is unchanged. */
+    * tie-ranking downstream is unchanged. A NaN or ±Inf cutoff never
+    * abandons. */
   def dtwFlatEA(a: Array[Double], b: Array[Double], radius: Int, cutoff: Double): Double = {
-    if (cutoff.isNaN || cutoff.isInfinity) return dtwFlat(a, b, radius)
     val l1 = a.length; val l2 = b.length
     if (l1 == 0 || l2 == 0) return Double.NaN
+    // a literal -Inf cutoff would abandon every pair at the first row.
+    // The row-min update and the abandon check sit behind the
+    // loop-invariant `ea`; per-cell cost on the cutoff = +Inf path
+    // measured flat against the former separate loop
+    val ea = !(cutoff.isNaN || cutoff.isInfinity)
     val bounds = if (radius < 0) null else Mask.sakoeChiba(l1, l2, radius)
     var prev = new Array[Double](l2 + 1)
     var cur = new Array[Double](l2 + 1)
@@ -132,7 +111,7 @@ object Kernels {
         if (prev(j - 1) < m) m = prev(j - 1)
         val v = diff * diff + m
         cur(j) = v
-        if (v < rowMin) rowMin = v
+        if (ea && v < rowMin) rowMin = v
         j += 1
       }
       // compare in DISTANCE space: cutoff² can round BELOW the true
@@ -140,7 +119,7 @@ object Kernels {
       // abandon a candidate the tie rule must keep; IEEE sqrt is
       // correctly rounded and monotone, so sqrt(rowMin) > cutoff fires
       // only when the final distance strictly exceeds the cutoff
-      if (math.sqrt(rowMin) > cutoff) return Double.PositiveInfinity
+      if (ea && math.sqrt(rowMin) > cutoff) return Double.PositiveInfinity
       val t = prev; prev = cur; cur = t
       i += 1
     }

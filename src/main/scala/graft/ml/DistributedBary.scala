@@ -28,16 +28,23 @@ object DistributedBary {
   case class DbaBuf(var sums: Array[Double], var wsum: Array[Double],
                     var cost: Double, var n: Long)
 
-  /** KShape: flattened sz×sz gram of SBD-aligned z-normed members, plus
-    * their vector sum (for the eigenvector sign fix) and count. */
+  /** The state both KShape gram passes accumulate: flattened sz×sz gram
+    * of SBD-aligned z-normed members, plus their vector sum (for the
+    * eigenvector sign fix) and count. */
+  private[ml] sealed trait GramState {
+    var gram: Array[Double]; var xsum: Array[Double]; var n: Long
+  }
+
+  /** KShape gram pass buffer. */
   case class GramBuf(var gram: Array[Double], var xsum: Array[Double], var n: Long)
+      extends GramState
 
   /** Soft-DTW value + gradient w.r.t. the (broadcast) center. */
   case class GradBuf(var value: Double, var grad: Array[Double], var n: Long)
 
   /** GramBuf + the Σd² inertia numerator of the same assignment rows. */
   case class GramD2Buf(var gram: Array[Double], var xsum: Array[Double],
-                       var n: Long, var d2: Double)
+                       var n: Long, var d2: Double) extends GramState
 
   private def addInto(a: Array[Double], b: Array[Double]): Array[Double] = {
     if (a.length == 0) return b
@@ -46,6 +53,33 @@ object DistributedBary {
     var i = 0
     while (i < small.length) { big(i) += small(i); i += 1 }
     big
+  }
+
+  /** One member's gram accumulate, shared by [[GramAgg]] and [[GramD2Agg]]:
+    * SBD-align `x` to `center`, z-norm, add z·zᵀ and z (fixed in-row
+    * float order). */
+  private def accumulateGram(b: GramState, center: Kernels.TS, x: Array[Double]): Unit = {
+    val sz = center.length
+    if (b.gram.length < sz * sz) {
+      b.gram = java.util.Arrays.copyOf(b.gram, sz * sz)
+      b.xsum = java.util.Arrays.copyOf(b.xsum, sz)
+    }
+    val gram = b.gram; val xsum = b.xsum
+    val aligned = Ncc.shiftToAlign(center, Kernels.uni(x))
+    val z = Kernels.scaleMeanVariance(aligned).map(_(0))
+    var i = 0
+    while (i < sz) {
+      val zi = z(i)
+      xsum(i) += zi
+      var j = 0
+      while (j < sz) { gram(i * sz + j) += zi * z(j); j += 1 }
+      i += 1
+    }
+    b.n += 1
+  }
+
+  private def mergeGram(a: GramState, b: GramState): Unit = {
+    a.gram = addInto(a.gram, b.gram); a.xsum = addInto(a.xsum, b.xsum); a.n += b.n
   }
 
   /** Per-cluster ragged per-timestep mean — each timestep averages the
@@ -118,29 +152,10 @@ object DistributedBary {
       centers.map(c => if (c == null) null else Kernels.uni(c))
     def zero: GramBuf = GramBuf(Array.emptyDoubleArray, Array.emptyDoubleArray, 0L)
     def reduce(b: GramBuf, in: (Int, Array[Double])): GramBuf = {
-      val center = centers2d(in._1)
-      val sz = center.length
-      if (b.gram.length < sz * sz) {
-        b.gram = java.util.Arrays.copyOf(b.gram, sz * sz)
-        b.xsum = java.util.Arrays.copyOf(b.xsum, sz)
-      }
-      val aligned = Ncc.shiftToAlign(center, Kernels.uni(in._2))
-      val z = Kernels.scaleMeanVariance(aligned).map(_(0))
-      var i = 0
-      while (i < sz) {
-        val zi = z(i)
-        b.xsum(i) += zi
-        var j = 0
-        while (j < sz) { b.gram(i * sz + j) += zi * z(j); j += 1 }
-        i += 1
-      }
-      b.n += 1
+      accumulateGram(b, centers2d(in._1), in._2)
       b
     }
-    def merge(a: GramBuf, b: GramBuf): GramBuf = {
-      a.gram = addInto(a.gram, b.gram); a.xsum = addInto(a.xsum, b.xsum); a.n += b.n
-      a
-    }
+    def merge(a: GramBuf, b: GramBuf): GramBuf = { mergeGram(a, b); a }
     def finish(b: GramBuf): GramBuf = b
     def bufferEncoder: Encoder[GramBuf] = Encoders.product[GramBuf]
     def outputEncoder: Encoder[GramBuf] = Encoders.product[GramBuf]
@@ -148,7 +163,7 @@ object DistributedBary {
 
   /** [[GramAgg]] extended with the Σd² of the rows' pre-computed SBD
     * distances — the inertia-fused KShape iteration pass. The gram/xsum
-    * accumulation is line-for-line GramAgg's (same in-row float order). */
+    * accumulation is GramAgg's own (one `accumulateGram`). */
   class GramD2Agg(centers: Array[Array[Double]])
       extends Aggregator[(Int, Double, Array[Double]), GramD2Buf, GramD2Buf]
       with Serializable {
@@ -157,29 +172,12 @@ object DistributedBary {
     def zero: GramD2Buf =
       GramD2Buf(Array.emptyDoubleArray, Array.emptyDoubleArray, 0L, 0.0)
     def reduce(b: GramD2Buf, in: (Int, Double, Array[Double])): GramD2Buf = {
-      val center = centers2d(in._1)
-      val sz = center.length
-      if (b.gram.length < sz * sz) {
-        b.gram = java.util.Arrays.copyOf(b.gram, sz * sz)
-        b.xsum = java.util.Arrays.copyOf(b.xsum, sz)
-      }
-      val aligned = Ncc.shiftToAlign(center, Kernels.uni(in._3))
-      val z = Kernels.scaleMeanVariance(aligned).map(_(0))
-      var i = 0
-      while (i < sz) {
-        val zi = z(i)
-        b.xsum(i) += zi
-        var j = 0
-        while (j < sz) { b.gram(i * sz + j) += zi * z(j); j += 1 }
-        i += 1
-      }
-      b.n += 1
+      accumulateGram(b, centers2d(in._1), in._3)
       b.d2 += in._2 * in._2
       b
     }
     def merge(a: GramD2Buf, b: GramD2Buf): GramD2Buf = {
-      a.gram = addInto(a.gram, b.gram); a.xsum = addInto(a.xsum, b.xsum)
-      a.n += b.n; a.d2 += b.d2
+      mergeGram(a, b); a.d2 += b.d2
       a
     }
     def finish(b: GramD2Buf): GramD2Buf = b

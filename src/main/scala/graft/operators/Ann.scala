@@ -153,9 +153,9 @@ object Ann {
     * of `rerank` per query (cheap, codes-only) is equi-joined back to
     * the exact candidate vectors — rerank·|queries| rows, never the
     * corpus — and exact cosine re-ranks to the final k. ADC alone
-    * saturates ~0.5 recall@10 from 8-byte quantization error (AnnProbe,
-    * 1 M corpus); rerank ≈ 4k recovers near-IVF recall at ~the same
-    * wall. Default 0 keeps the pure-ADC contract (and the driver
+    * saturates ~0.5 recall@10 from 8-byte quantization error (1 M
+    * corpus, SCALEPROBE.md round 12 fifth probe); rerank ≈ 4k
+    * recovers near-IVF recall at ~the same wall. Default 0 keeps the pure-ADC contract (and the driver
     * oracle's replay) unchanged. */
   def ivfPqTopK(candidates: DataFrame, queries: DataFrame, k: Int,
                 centroids: Array[Array[Double]], nprobe: Int,
@@ -764,15 +764,16 @@ object Ann {
     *  - bits per band r from target bucket occupancy: a band code must
     *    discriminate the corpus into ~n/2^r ≈ `targetBucket` rows, so
     *    r = ⌈log₂(n / targetBucket)⌉ — this is the "code bits must grow
-    *    with log₂(n)" rule the 1 M AnnProbe run measured (recall 0.117
-    *    at the old fixed 4-bit bands; buckets of 62 k rows).
+    *    with log₂(n)" rule the 1 M ANN probe measured (recall 0.117
+    *    at the old fixed 4-bit bands; buckets of 62 k rows; SCALEPROBE.md
+    *    round 12 fifth probe).
     *  - bands b from the recall law P(candidate) = 1 − (1 − pʳ)ᵇ ≥
     *    `recallTarget`, at p = `pNear`, the sign-collision probability
     *    1 − θ/π of a true top-k neighbor. The default 0.68 is MEASURED:
-    *    the 1 M lshauto AnnProbe campaign (SCALEPROBE round 14) ran the
-    *    previous p=0.77 derivation (144 bits / 18 bands) and observed
-    *    recall 0.579, not the ≥0.9 it was solved for; inverting the law
-    *    at (r=8, b=18) gives the effective p = 0.682 of a true top-10
+    *    the 1 M lshauto campaign (SCALEPROBE.md round 14 ninth probe)
+    *    ran the previous p=0.77 derivation (144 bits / 18 bands) and
+    *    observed recall 0.579, not the ≥0.9 it was solved for; inverting
+    *    the law at (r=8, b=18) gives the effective p = 0.682 of a true top-10
     *    neighbor on the clustered probe corpus. CAVEAT, also measured:
     *    a single-p law OVERESTIMATES recall, because true neighbors are
     *    heterogeneous — the validation re-run at the re-fit (138, 23)
@@ -845,8 +846,9 @@ object Ann {
     *
     * `nBits`/`nBands` ≤ 0 (the default) derives both from the candidate
     * count via [[autoLshParams]] — band bits that actually grow with
-    * log₂(n) (the 1 M AnnProbe run measured recall 0.117 at the old
-    * fixed 16/4 defaults — exactly the scale the operator exists for).
+    * log₂(n) (the 1 M ANN probe, SCALEPROBE.md round 12 fifth probe,
+    * measured recall 0.117 at the old fixed 16/4 defaults — exactly the
+    * scale the operator exists for).
     * Operating regime, measured at 1 M (SCALEPROBE r14): sign-LSH's
     * value is CHEAP MODERATE-RECALL candidate generation (e.g. 0.58
     * recall at ~7 % candidate mass). Holding ≥0.9 recall at this scale
@@ -865,8 +867,9 @@ object Ann {
     *
     * Hot-bucket cap: a band code holding a huge slice of the corpus is
     * a useless discriminator whose candidate join would emit
-    * width·|queries| rows (AnnProbe measured 4-bit band codes at 1 M
-    * vectors filling the shuffle disk with a 250 M-row join). The cap
+    * width·|queries| rows (SCALEPROBE.md round 12 fifth probe measured
+    * 4-bit band codes at 1 M vectors filling the shuffle disk with a
+    * 250 M-row join). The cap
     * is folded into the candidate scan as a window count over
     * (band, code) — same single job, no eager detection pass (the old
     * groupBy + count() guard cost two extra jobs per call even when no

@@ -148,15 +148,59 @@ object Cdist {
   def knnDtwPruned(probes: DataFrame, train: DataFrame, k: Int, radius: Int,
                    factor: Int = 4, seriesCol: String = "values",
                    maxIndexRows: Long = 100000, blocks: Int = 16): DataFrame = {
-    // limit+count short-circuits: answers "more than maxIndexRows?" without
-    // scanning the full relation; the +1 saturates instead of overflowing
-    // (maxIndexRows = Long.MaxValue must mean "never blocked", not a
-    // wrapped-negative limit(0))
+    if (overIndexCap(train, maxIndexRows))
+      knnDtwBlocked(probes, train, k, radius, factor, blocks, seriesCol)
+    else knnDtwBroadcastIndex(probes, train, k, radius, factor, seriesCol)
+  }
+
+  /** The scale guard of both kNN dispatchers: does `train` hold more than
+    * `maxIndexRows` rows? limit+count short-circuits: answers without
+    * scanning the full relation; the +1 saturates instead of overflowing
+    * (maxIndexRows = Long.MaxValue must mean "never blocked", not a
+    * wrapped-negative limit(0)). */
+  private def overIndexCap(train: DataFrame, maxIndexRows: Long): Boolean = {
     val cap = if (maxIndexRows >= Int.MaxValue - 1L) Int.MaxValue
               else (maxIndexRows + 1).toInt
-    val over = train.select(col("series_id")).limit(cap).count() > maxIndexRows
-    if (over) knnDtwBlocked(probes, train, k, radius, factor, blocks, seriesCol)
-    else knnDtwBroadcastIndex(probes, train, k, radius, factor, seriesCol)
+    train.select(col("series_id")).limit(cap).count() > maxIndexRows
+  }
+
+  /** The (probe chunk × train block) tiles both no-broadcast kNN routes
+    * scan, as rows of (blk, slt, ps, idx): `ps` is a chunk's
+    * (probe_id, q) structs and `idx` one block's `entry` structs, built
+    * from `trainRows` (an `id` column plus whatever `entry` reads). */
+  private def tiles(probes: DataFrame, trainRows: DataFrame, entry: Column,
+                    blocks: Int, seriesCol: String): DataFrame = {
+    require(blocks >= 1, "blocks must be >= 1")
+    // salt the (small) index side: `blocks` alone is too few join keys
+    // to occupy a fleet — without it the tile scan ran on ≤`blocks`
+    // tasks regardless of cores (measured: 5 busy threads of 32 at the
+    // sf1 octave). Each block row replicates `salt`×; a probe chunk
+    // joins exactly the replica at chk % salt, so every tile pair still
+    // meets exactly once, over blocks·salt ≥ 4·parallelism keys.
+    val salt = math.max(1,
+      (4 * trainRows.sparkSession.sparkContext.defaultParallelism + blocks - 1) / blocks)
+    val tIdx = trainRows
+      .withColumn("blk", pmod(xxhash64(col("id")), lit(blocks)).cast("int"))
+      .groupBy("blk")
+      .agg(collect_list(entry).as("idx"))
+      .withColumn("slt", explode(sequence(lit(0), lit(salt - 1))))
+    // probes tile into chunks so one task call scans (chunk × block):
+    // the block index deserializes ONCE per tile pair, not once per
+    // probe row — per-row UDF decode of a thousand-entry struct array
+    // was the measured bottleneck at the sf1 octave (5 effective
+    // threads, minutes of pure deserialization)
+    val chunks = math.max(32,
+      probes.sparkSession.sparkContext.defaultParallelism * 4)
+    val pChunks = probes
+      .select(col("series_id").cast("long").as("probe_id"),
+        col(seriesCol).cast("array<double>").as("q"))
+      .withColumn("chk", pmod(xxhash64(col("probe_id")), lit(chunks)).cast("int"))
+      .groupBy("chk")
+      .agg(collect_list(struct(col("probe_id").as("_1"), col("q").as("_2"))).as("ps"))
+      .withColumn("blk", explode(sequence(lit(0), lit(blocks - 1))))
+      .withColumn("slt", pmod(col("chk"), lit(salt)).cast("int"))
+    // shuffle-hash: these routes exist because train exceeds broadcast size
+    pChunks.join(tIdx.hint("shuffle_hash"), Seq("blk", "slt"))
   }
 
   private def knnDtwBroadcastIndex(probes: DataFrame, train: DataFrame, k: Int, radius: Int,
@@ -288,39 +332,12 @@ object Cdist {
   private[graft] def knnDtwBlocked(probes: DataFrame, train: DataFrame, k: Int, radius: Int,
                                    factor: Int = 4, blocks: Int = 16,
                                    seriesCol: String = "values"): DataFrame = {
-    require(blocks >= 1, "blocks must be >= 1")
+    val tileRows = tiles(probes,
+      train.select(col("series_id").cast("long").as("id"),
+        TsFunctions.envelopeUdf(col(seriesCol), lit(radius)).as("env")),
+      struct(col("id").as("_1"), col("env._1").as("_2"), col("env._2").as("_3")),
+      blocks, seriesCol)
     val kf = k * factor
-    // salt the (small) index side: `blocks` alone is too few join keys
-    // to occupy a fleet — without it the tile scan ran on ≤`blocks`
-    // tasks regardless of cores (measured: 5 busy threads of 32 at the
-    // sf1 octave). Each block row replicates `salt`×; a probe chunk
-    // joins exactly the replica at chk % salt, so every tile pair still
-    // meets exactly once, over blocks·salt ≥ 4·parallelism keys.
-    val salt = math.max(1,
-      (4 * train.sparkSession.sparkContext.defaultParallelism + blocks - 1) / blocks)
-    val tEnv = train
-      .select(col("series_id").cast("long").as("id"),
-        TsFunctions.envelopeUdf(col(seriesCol), lit(radius)).as("env"))
-      .withColumn("blk", pmod(xxhash64(col("id")), lit(blocks)).cast("int"))
-      .groupBy("blk")
-      .agg(collect_list(struct(col("id").as("_1"),
-        col("env._1").as("_2"), col("env._2").as("_3"))).as("idx"))
-      .withColumn("slt", explode(sequence(lit(0), lit(salt - 1))))
-    // probes tile into chunks so one task call scans (chunk × block):
-    // the block index deserializes ONCE per tile pair, not once per
-    // probe row — per-row UDF decode of a thousand-entry struct array
-    // was the measured bottleneck at the sf1 octave (5 effective
-    // threads, minutes of pure deserialization)
-    val chunks = math.max(32,
-      probes.sparkSession.sparkContext.defaultParallelism * 4)
-    val pChunks = probes
-      .select(col("series_id").cast("long").as("probe_id"),
-        col(seriesCol).cast("array<double>").as("q"))
-      .withColumn("chk", pmod(xxhash64(col("probe_id")), lit(chunks)).cast("int"))
-      .groupBy("chk")
-      .agg(collect_list(struct(col("probe_id").as("_1"), col("q").as("_2"))).as("ps"))
-      .withColumn("blk", explode(sequence(lit(0), lit(blocks - 1))))
-      .withColumn("slt", pmod(col("chk"), lit(salt)).cast("int"))
     // per-(tile × block) survivors as (probe_id, lb, id) — struct field
     // ORDER after probe_id is the merge key: array_sort on (_1=lb,
     // _2=id) reproduces the broadcast path's global candidate selection
@@ -340,8 +357,7 @@ object Cdist {
         pos.indices.map(j => (pid, lbs(j), ids(pos(j))))
       }.toArray
     })
-    // shuffle-hash: this path exists because train exceeds broadcast size
-    val winners = pChunks.join(tEnv.hint("shuffle_hash"), Seq("blk", "slt"))
+    val winners = tileRows
       .select(explode(lbUdf(col("ps"), col("idx"))).as("c"))
       .select(col("c._1").as("probe_id"),
         struct(col("c._2").as("_1"), col("c._3").as("_2")).as("c"))
@@ -394,10 +410,8 @@ object Cdist {
   def knnDtwRagged(probes: DataFrame, train: DataFrame, k: Int, radius: Int = -1,
                    seriesCol: String = "values", maxIndexRows: Long = 100000,
                    blocks: Int = 16): DataFrame = {
-    val cap = if (maxIndexRows >= Int.MaxValue - 1L) Int.MaxValue
-              else (maxIndexRows + 1).toInt
-    val over = train.select(col("series_id")).limit(cap).count() > maxIndexRows
-    if (over) knnDtwRaggedBlocked(probes, train, k, radius, blocks, seriesCol)
+    if (overIndexCap(train, maxIndexRows))
+      knnDtwRaggedBlocked(probes, train, k, radius, blocks, seriesCol)
     else {
       val spark = probes.sparkSession
       import spark.implicits._
@@ -431,26 +445,11 @@ object Cdist {
   private[graft] def knnDtwRaggedBlocked(probes: DataFrame, train: DataFrame, k: Int,
                                          radius: Int, blocks: Int = 16,
                                          seriesCol: String = "values"): DataFrame = {
-    require(blocks >= 1, "blocks must be >= 1")
-    val salt = math.max(1,
-      (4 * train.sparkSession.sparkContext.defaultParallelism + blocks - 1) / blocks)
-    val tIdx = train
-      .select(col("series_id").cast("long").as("id"),
-        col(seriesCol).cast("array<double>").as("tv"))
-      .withColumn("blk", pmod(xxhash64(col("id")), lit(blocks)).cast("int"))
-      .groupBy("blk")
-      .agg(collect_list(struct(col("id").as("_1"), col("tv").as("_2"))).as("idx"))
-      .withColumn("slt", explode(sequence(lit(0), lit(salt - 1))))
-    val chunks = math.max(32,
-      probes.sparkSession.sparkContext.defaultParallelism * 4)
-    val pChunks = probes
-      .select(col("series_id").cast("long").as("probe_id"),
-        col(seriesCol).cast("array<double>").as("q"))
-      .withColumn("chk", pmod(xxhash64(col("probe_id")), lit(chunks)).cast("int"))
-      .groupBy("chk")
-      .agg(collect_list(struct(col("probe_id").as("_1"), col("q").as("_2"))).as("ps"))
-      .withColumn("blk", explode(sequence(lit(0), lit(blocks - 1))))
-      .withColumn("slt", pmod(col("chk"), lit(salt)).cast("int"))
+    val tileRows = tiles(probes,
+      train.select(col("series_id").cast("long").as("id"),
+        col(seriesCol).cast("array<double>").as("tv")),
+      struct(col("id").as("_1"), col("tv").as("_2")),
+      blocks, seriesCol)
     val tileUdf = udf((ps: scala.collection.Seq[(Long, scala.collection.Seq[Double])],
                        idx: scala.collection.Seq[(Long, scala.collection.Seq[Double])]) => {
       // arrays up front: the converter's Seq can be a linked list and
@@ -461,7 +460,7 @@ object Cdist {
         cascade(q.toArray, index, k, radius).map { case (id, d) => (pid, d, id) }
       }.toArray
     })
-    pChunks.join(tIdx.hint("shuffle_hash"), Seq("blk", "slt"))
+    tileRows
       .select(explode(tileUdf(col("ps"), col("idx"))).as("c"))
       .select(col("c._1").as("probe_id"),
         struct(col("c._2").as("_1"), col("c._3").as("_2")).as("c"))

@@ -50,13 +50,63 @@ object Dedup {
         col(textCol), k, distinct = dedupe)).as("sh"))
   }
 
+  /** Capped inverted-index self-join over a raw (doc_id, sh) shingle-hash
+    * stream — the one index join behind [[jaccardPairs]] and
+    * [[containmentPairs]]. Shingles above a doc-frequency cap are dropped
+    * from the metric: a hot shingle — a stop-word k-gram in > maxDf docs
+    * — would make its inverted-index bucket quadratic; capping
+    * ([[dfCapped]]: skew-immune groupBy df + broadcast anti-join of the
+    * hot set, plan-locked in PlanAuditSpec) bounds every bucket at
+    * maxDf² pairs. localCheckpoint the RAW stream, not the capped one:
+    * dfCapped consumes its input twice (hot-set groupBy + the anti-join)
+    * and the capped result three more times (both self-join sides +
+    * sizes) — checkpointing before the cap means shingle generation runs
+    * exactly once and every later pass is a cheap in-memory scan +
+    * broadcast anti (8.4 s → 4.3 s cold on the Jaccard query).
+    * localCheckpoint, not persist, so the blocks are released by the
+    * context cleaner instead of pinned for the rest of a 60+-query Bench
+    * session. Returns the doc_a < doc_b pairs sharing a capped shingle,
+    * with their intersection `inter` and set sizes `sz_a`, `sz_b`. */
+  private def overlapPairs(raw: DataFrame, maxDf: Int): DataFrame = {
+    val capped = dfCapped(raw.localCheckpoint(), maxDf).select(col("doc_id"), col("sh"))
+    val sizes = capped.groupBy("doc_id").agg(count(lit(1)).as("sz"))
+    val a = capped.select(col("doc_id").as("doc_a"), col("sh"))
+    val b = capped.select(col("doc_id").as("doc_b"), col("sh"))
+    a.join(b, "sh").where(col("doc_a") < col("doc_b"))
+      .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("inter"))
+      .join(sizes.select(col("doc_id").as("doc_a"), col("sz").as("sz_a")), "doc_a")
+      .join(sizes.select(col("doc_id").as("doc_b"), col("sz").as("sz_b")), "doc_b")
+  }
+
+  /** Word 3-shingle Jaccard near-dup pairs (doc_a < doc_b, jac ≥
+    * threshold) via the inverted index capped at doc frequency 100. Docs
+    * with fewer than 3 words have no 3-grams and are skipped. Shingle construction +
+    * per-doc distinct + 60-bit hash run in ONE native pass over the text
+    * bytes (ShingleHash60Expression, case kept — no intermediate
+    * shingle strings, no interpreted HOF chain); the checkpoint, the
+    * df-cap groupBy and the index join then all carry an 8-byte key
+    * instead of a ~20-byte string. The output never exposes the shingle
+    * (a 60-bit collision at 450 k distinct shingles is ~1e-7 and would
+    * only merge two index buckets). */
+  def jaccardPairs(docsDf: DataFrame, threshold: Double): DataFrame = {
+    val raw = docsDf.select(col("doc_id"), col("text"))
+      .where(size(split(col("text"), " ")) >= 3)
+      .select(col("doc_id"),
+        explode(graft.functions.NativeExpressions.shingleHash60Native(
+          col("text"), 3)).as("sh"))
+    overlapPairs(raw, 100)
+      .withColumn("jac", col("inter") / (col("sz_a") + col("sz_b") - col("inter")))
+      .where(col("jac") >= threshold)
+      .select(col("doc_a"), col("doc_b"), col("jac"))
+  }
+
   /** Directional shingle containment C(a → b) = |Sh(a) ∩ Sh(b)| / |Sh(a)|
     * — the quote / near-subset detector Jaccard misses: a short doc
     * fully quoted inside a long one has containment ≈ 1 but low Jaccard
     * (the union is dominated by the long doc). Same capped
-    * inverted-index join as the Jaccard pipeline (dfCapped bounds every
-    * shingle bucket at maxDf² pairs); emits BOTH directions of a pair
-    * when they clear the threshold, since containment is asymmetric. */
+    * inverted-index join as [[jaccardPairs]]; emits BOTH directions of a
+    * pair when they clear the threshold, since containment is
+    * asymmetric. */
   def containmentPairs(docsDf: DataFrame, threshold: Double, k: Int = 3,
                        maxDf: Int = 100): DataFrame = {
     // construction + per-doc distinct + 60-bit hash in one native pass
@@ -67,22 +117,12 @@ object Dedup {
     val raw = docsDf.select(col("doc_id"),
       explode(graft.functions.NativeExpressions.shingleHash60Native(
         col("text"), k, lowercase = true, distinct = true)).as("sh"))
-    // localCheckpoint before dfCapped for the same reuse reasons as
-    // doc_jaccard_pairs (hot-set groupBy + anti-join + both join sides)
-    val capped = dfCapped(raw.localCheckpoint(), maxDf).select(col("doc_id"), col("sh"))
-    val sizes = capped.groupBy("doc_id").agg(count(lit(1)).as("sz"))
-    val a = capped.select(col("doc_id").as("doc_a"), col("sh"))
-    val b = capped.select(col("doc_id").as("doc_b"), col("sh"))
     // the intersection is symmetric: run the heavy inverted-index join
     // over the a < b triangle ONCE, then emit both directions from the
     // (far smaller) pair list. localCheckpoint: the union reads the
     // joined pair frame twice; uncheckpointed, the whole index join
     // would re-evaluate per direction.
-    val withSizes = a.join(b, "sh").where(col("doc_a") < col("doc_b"))
-      .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("inter"))
-      .join(sizes.select(col("doc_id").as("doc_a"), col("sz").as("sz_a")), "doc_a")
-      .join(sizes.select(col("doc_id").as("doc_b"), col("sz").as("sz_b")), "doc_b")
-      .localCheckpoint()
+    val withSizes = overlapPairs(raw, maxDf).localCheckpoint()
     withSizes.select(col("doc_a"), col("doc_b"),
         (col("inter") / col("sz_a")).as("containment"))
       .union(withSizes.select(col("doc_b"), col("doc_a"),
@@ -676,7 +716,7 @@ object Dedup {
       // and √n cells strictly wins as n grows — at 10⁸ vectors the old
       // 1024 cap meant ~10⁵-member cells and ~4·10⁵ candidates/vector.
       // nprobe = 4 is the measured knee of the recall/wall frontier
-      // (CosineProbe, SCALEPROBE round 12: recall 0.51 → 0.87-0.93 over
+      // (SCALEPROBE.md round 12 second probe: recall 0.51 → 0.87-0.93 over
       // nprobe 2 → 4 at the SAME wall; nprobe 8 buys ~1.0 recall at ~3×
       // the wall)
       val lists = if (nlist > 0) nlist
@@ -721,9 +761,10 @@ object Dedup {
       TsFunctions.l2NormalizeUdf(transform(col(vecCol), x => x.cast("double"))).as("v"))
       .localCheckpoint(eager = false)
     // sampleCap scales with nlist (40 training points per cell, the
-    // AnnProbe ivfsweep rule): the default 20 k over the router's
-    // ceiling would leave ~2 points/cell — empty-cell reseeds and a
-    // junk quantizer. trainCoarseAuto routes to the DISTRIBUTED Lloyd
+    // 10 M ivfsweep rule, SCALEPROBE.md round 14 tenth probe): the
+    // default 20 k over the router's ceiling would leave ~2
+    // points/cell — empty-cell reseeds and a junk quantizer.
+    // trainCoarseAuto routes to the DISTRIBUTED Lloyd
     // past nlist=4096, where the driver-local trainer's quadratic
     // 40·nlist²·d·iters term stops fitting one machine (VERDICT r14 #1;
     // measured: driver 209.5 s at 4096 vs distributed 390 s at 16384 —

@@ -572,7 +572,8 @@ class DedupAnnSpec extends AnyFunSuite {
     // rerank ≥ every probed candidate ⇒ the second stage ranks the SAME
     // candidate set ivfTopK ranks, by the SAME exact cosine — so the two
     // routes must agree bit-for-bit. Locks the rerank join + re-ranking
-    // semantics (the production recall recovery AnnProbe measured).
+    // semantics (the production recall recovery measured in SCALEPROBE.md
+    // round 12, fifth probe).
     val e = spark.read.parquet(s"$sf/embeddings.parquet")
       .select(col("vec_id"), expr("transform(embedding, x -> cast(x as double))").as("v"))
     val queries = e.where(col("vec_id") < 6)

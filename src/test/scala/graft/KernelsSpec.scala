@@ -336,5 +336,34 @@ class KernelsSpec extends AnyFunSuite {
     // a far pair abandons (the row-min bound engages)
     val x = Array.fill(64)(0.0); val y = Array.fill(64)(100.0)
     assert(Kernels.dtwFlatEA(x, y, -1, 1.0).isPosInfinity)
+
+    // dtwFlat is dtwFlatEA's never-abandon case, and so is every
+    // non-finite cutoff (+Inf, -Inf, NaN): all of them must reproduce
+    // the multivariate DP Kernels.dtw (same compare order) by raw bits,
+    // on degenerate inputs (empty, sz 1, ragged, NaN values, radius
+    // -1 / 0 / >= sz) and on seeded random pairs. A -Inf cutoff taken
+    // literally would abandon every pair at the first row.
+    def bits(d: Double) = java.lang.Double.doubleToRawLongBits(d)
+    def gauss(n: Int) = Array.fill(n)(rng.nextGaussian())
+    val withNaN = { val s = gauss(9); s(4) = Double.NaN; s }
+    val degenerate = Seq(
+      (Array.emptyDoubleArray, gauss(5)), (gauss(5), Array.emptyDoubleArray),
+      (Array.emptyDoubleArray, Array.emptyDoubleArray),
+      (Array(1.5), Array(-2.0)), (Array(0.5), gauss(7)), (gauss(7), Array(0.5)),
+      (gauss(6), gauss(11)), (gauss(13), gauss(4)),
+      (withNaN, gauss(9)), (gauss(6), withNaN), (Array(Double.NaN), gauss(3)),
+      (Array.fill(4)(Double.NaN), Array.fill(4)(Double.NaN)))
+    val random = Seq.fill(300)((gauss(1 + rng.nextInt(40)), gauss(1 + rng.nextInt(40))))
+    for ((a, b) <- degenerate ++ random;
+         radius <- Seq(-1, 0, 2, math.max(a.length, b.length), math.max(a.length, b.length) + 3)) {
+      val bounds = if (radius < 0) Mask.none(a.length, b.length)
+                   else Mask.sakoeChiba(a.length, b.length, radius)
+      val want = bits(Kernels.dtw(uni(a), uni(b), bounds))
+      val where = s"sz ${a.length}x${b.length} radius $radius"
+      assert(bits(Kernels.dtwFlat(a, b, radius)) == want, s"dtwFlat, $where")
+      for (cutoff <- Seq(Double.PositiveInfinity, Double.NegativeInfinity, Double.NaN))
+        assert(bits(Kernels.dtwFlatEA(a, b, radius, cutoff)) == want,
+          s"dtwFlatEA cutoff $cutoff, $where")
+    }
   }
 }

@@ -473,7 +473,8 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("growing-state zipf soak on RocksDB: state grows, throughput does not cliff") {
-    // VERDICT r13 #4 (CI twin of graft.tools.StateSoakProbe): the
+    // VERDICT r13 #4 (CI twin of the RocksDB soak, SCALEPROBE.md round
+    // 14 eleventh probe): the
     // composed soak above replays a fixed 40-doc pool, so band-bucket
     // state stays flat at ≤640 keys — useless as evidence the
     // disk-backed provider sustains ingest while state GROWS. This
